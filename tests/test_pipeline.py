@@ -195,6 +195,31 @@ def test_render_final_report_byte_parity(spark, summaries):
     ]
 
 
+def test_render_final_report_flag_only_summary_renders_in_body(spark, tmp_path):
+    """A summary.txt with a verdict but no data row parses to a NULL-table
+    row (parse_summaries keeps it on purpose). It renders inside the table
+    body with a blank TABLE cell, ordered as the empty name — not above the
+    banner, where a NULL sort key used to put it."""
+    from tidb_large_table_compare_spark.plans.report import render_final_report
+
+    _write_summary(tmp_path, "users", "20240103_010101", 12, 34, False)
+    d = tmp_path / "db_orders_20240103_010101"
+    d.mkdir()
+    (d / "summary.txt").write_text(f"check pass!!!\n{EQUIVALENT_MARKER}\n")
+
+    parsed = parse_summaries(spark, f"{tmp_path}/*/summary.txt")
+    lines = [r.line for r in render_final_report(parsed).collect()]
+    assert lines[0] == "═" * 60
+    body = lines[lines.index("+-------------------+-----------+---------+-----------+", 7) + 1:]
+    assert body[:3] == [
+        "|                   | 一致    |         |           |",
+        "| `db`.`users`      | 差异    |      12 |        34 |",
+        "+-------------------+-----------+---------+-----------+",
+    ]
+    assert "[INFO] 找到 2 个 summary.txt 文件" in lines
+    assert [r.line for r in render_report(parsed).collect()][3].startswith("|       ")
+
+
 def test_render_final_report_leaves_nothing_cached(spark, summaries):
     """The final report must not pin cached frames across renders (ADVICE
     r4: a persist() on the latest-run dedup was never released on the

@@ -322,10 +322,9 @@ def _run(args) -> int:
 
     # report (A16-A25): the reference's complete final-report block
     # (step3_run_syncdiff.sh:175-244), then a machine-readable line.
-    # run.summaries is a driver-local createDataFrame relation
-    # (plans/pipeline.py::run_jobs), so the two actions below (render +
-    # totals) re-scan a handful of local rows, not a distributed plan —
-    # no persist needed.
+    # run.summaries is a local relation (plans/pipeline.py::run_jobs), so
+    # the two collects below (render + totals) run no Spark job — no
+    # persist needed.
     lines = [r.line for r in render_final_report(run.summaries).collect()]
     totals = report_totals(run.summaries).collect()[0]
     report = "\n".join(lines) + (

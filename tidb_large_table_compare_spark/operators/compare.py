@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tidb_large_table_compare_spark.functions.frames import local_frame
 from tidb_large_table_compare_spark.functions.hashing import (
     bucket_id,
     canonical_value,
@@ -628,8 +629,8 @@ class TableCompare:
         pk = set(self.pk)
         cols = [c for c in self.compare_cols if c not in pk]
         if not cols:
-            return self.spark.createDataFrame(
-                [], "column_name string, mismatch_rows bigint"
+            return local_frame(
+                self.spark, [], "column_name string, mismatch_rows bigint"
             )
         fr = self.options.float_round
         ltypes = {f.name: f.dataType for f in self.left.schema.fields}
@@ -703,7 +704,8 @@ class TableCompare:
         """
         struct_ok = self.structure_ok()
         if self.options.check_struct_only:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(self.table_name, struct_ok, 0, 0, struct_ok)],
                 "table string, structure_ok boolean, upcount bigint, "
                 "downcount bigint, equivalent boolean",

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tidb_large_table_compare_spark.functions.frames import local_frame
 from tidb_large_table_compare_spark.operators.compare import (
     CompareOptions,
     compare_tables,
@@ -87,6 +88,8 @@ def run_jobs(
     Each job's summary is computed eagerly (it is a one-row result; the heavy
     lifting stays distributed) so per-table failures are isolated exactly the
     way the reference isolates per-config tool failures (``step3:111-122``).
+    The collected rows come back as an Arrow local relation, so the report
+    stage reads them without running a Spark job.
 
     ``progress`` receives one reference-style line per *completed* table
     (N of M, per-table wall-clock) as jobs finish.
@@ -139,7 +142,8 @@ def run_jobs(
         (run_ts, table, row.structure_ok, row.upcount, row.downcount, secs)
         for table, row, secs in results
     ]
-    summaries = spark.createDataFrame(
+    summaries = local_frame(
+        spark,
         rows,
         "run_ts string, table string, structure_ok boolean, "
         "upcount bigint, downcount bigint, duration_s double",

@@ -11,13 +11,29 @@ The pipeline reproduces the reference's final report exactly:
 - TOTAL_UPCOUNT / TOTAL_DOWNCOUNT sums (A22, ``step3:224-227``)
 - scaled "N M 行" volume formatting (A23, ``step3:241``)
 - fixed-width rendered table (A24, ``step3:190-234``)
+
+Rendering runs on the driver. The report is a terminal/tee artifact in the
+reference (``step3:175``) and driver-sized by definition: one summary row per
+compared table per run, the same budget as the drill-down IN-list cap. Each
+public function collects one Spark projection of ``summaries`` (the cell
+casts and the guarded counts stay Spark expressions), then filters, totals,
+pads and orders the rows in Python and returns them through
+``functions/frames.py::local_frame``. Over a local input (``run_jobs``'
+summaries) that collect runs no Spark job; over a parsed-text input it runs
+the input's own plan once. Output past Arrow's ``localRelationThreshold``
+(48 MB, far beyond any report) still works: Spark falls back to an RDD of
+the same rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import window as W
+
+from tidb_large_table_compare_spark.functions.frames import local_frame
 
 EQUIVALENT_MARKER = (
     "The table structure and data in following tables are equivalent"
@@ -34,33 +50,36 @@ REPORT_BANNER = "═" * 60  # step3_run_syncdiff.sh:176
 REPORT_TITLE = "                    最终比对报告                                    "
 NO_SUMMARY_LINE = "没有找到 summary.txt 文件"  # step3_run_syncdiff.sh:182
 
+_TOTALS_SCHEMA = (
+    "tables_checked bigint not null, structure_ok_cnt bigint, "
+    "structure_diff_cnt bigint, total_upcount bigint not null, "
+    "total_downcount bigint not null, volume_label string not null"
+)
 
-def _pad_cell(col: F.Column, width: int, align: str = "left") -> F.Column:
+
+def _pad_cell(text: str | None, width: int, align: str = "left") -> str:
     """Pad a cell the way bash ``printf %Ns`` does — by BYTES, not characters.
 
-    ``printf "%-9s" 一致`` emits the 6 UTF-8 bytes plus 3 spaces; Java's
-    ``format_string`` would pad the 2 *characters* to 9 and break bit-parity
-    (step3_run_syncdiff.sh:221). Overlong values pass through unpadded,
-    matching printf (Spark's lpad/rpad would truncate them), and NULL cells
-    render as all-spaces like printf's empty string (A20: a summary whose
-    count failed the numeric guard still renders its row).
+    ``printf "%-9s" 一致`` emits the 6 UTF-8 bytes plus 3 spaces (Python's
+    and Java's formatters would pad the 2 *characters* to 9 and break
+    bit-parity, step3_run_syncdiff.sh:221). Overlong values pass through
+    unpadded, matching printf, and a NULL cell renders as all-spaces like
+    printf's empty string (A20: a summary whose count failed the numeric
+    guard still renders its row).
     """
-    s = F.coalesce(col.cast("string"), F.lit(""))
-    pad = F.repeat(F.lit(" "), F.greatest(F.lit(0), F.lit(width) - F.octet_length(s)))
-    return F.concat(pad, s) if align == "right" else F.concat(s, pad)
+    s = text or ""
+    pad = " " * max(0, width - len(s.encode("utf-8")))
+    return pad + s if align == "right" else s + pad
 
 
 def report_row_line(
-    table: F.Column, status: F.Column, up: F.Column, down: F.Column
-) -> F.Column:
+    table: str | None, status: str, up: str | None, down: str | None
+) -> str:
     """One rendered body row: ``| %-17s | %-9s | %7s | %9s |`` in printf-byte
     semantics (step3_run_syncdiff.sh:221)."""
-    return F.concat(
-        F.lit("| "), _pad_cell(table, 17),
-        F.lit(" | "), _pad_cell(status, 9),
-        F.lit(" | "), _pad_cell(up, 7, "right"),
-        F.lit(" | "), _pad_cell(down, 9, "right"),
-        F.lit(" |"),
+    return (
+        f"| {_pad_cell(table, 17)} | {_pad_cell(status, 9)} | "
+        f"{_pad_cell(up, 7, 'right')} | {_pad_cell(down, 9, 'right')} |"
     )
 
 
@@ -76,23 +95,81 @@ def latest_run(summaries: DataFrame) -> DataFrame:
     ).drop("__max_ts")
 
 
+def _latest_rows(summaries: DataFrame) -> list[Row]:
+    """A16/A20: the latest run's rows from ONE collect, body-ordered.
+
+    The projection keeps the Spark-side semantics the rendered text depends
+    on: cells are Spark's ``cast("string")`` of whatever types the counts
+    have, and the summed counts are the A20 guard — a value that does not
+    parse as a long is NULL and drops out of the sums. The latest-run filter
+    is ``sort -r | head -1`` on the driver (NULL run_ts never matches, as
+    Spark's max/equality drop it). A NULL table renders with a blank cell
+    and sorts as the empty name, inside the table body.
+    """
+    rows = summaries.select(
+        "run_ts",
+        F.col("table").cast("string").alias("table"),
+        F.when(F.col("structure_ok"), True).otherwise(False).alias("ok"),
+        F.col("upcount").cast("string").alias("up_cell"),
+        F.col("downcount").cast("string").alias("down_cell"),
+        F.col("upcount").cast("string").try_cast("long").alias("up"),
+        F.col("downcount").cast("string").try_cast("long").alias("down"),
+    ).collect()
+    latest = max((r.run_ts for r in rows if r.run_ts is not None), default=None)
+    # Python orders str by code point, which is Spark's UTF-8 byte order
+    return sorted(
+        (r for r in rows if r.run_ts is not None and r.run_ts == latest),
+        key=lambda r: r.table or "",
+    )
+
+
+def _totals(rows: list[Row]) -> tuple:
+    """A21-A23 as one ``_TOTALS_SCHEMA`` tuple. Over zero rows the tallies
+    are SQL's NULL sums and the count totals coalesce to 0."""
+    ok = sum(r.ok for r in rows) if rows else None
+    diff = len(rows) - ok if rows else None
+    up = sum(r.up for r in rows if r.up is not None)
+    down = sum(r.down for r in rows if r.down is not None)
+    # "总数据量: $((TOTAL_UPCOUNT / 1000000))M 行" — upcount only, not
+    # up+down (step3_run_syncdiff.sh:241); double division like SQL's "/"
+    return len(rows), ok, diff, up, down, f"{math.floor(up / 1e6)}M 行"
+
+
+def _body_lines(rows: list[Row]) -> list[str]:
+    return [
+        report_row_line(
+            r.table,
+            STRUCTURE_OK_LABEL if r.ok else STRUCTURE_DIFF_LABEL,
+            r.up_cell,
+            r.down_cell,
+        )
+        for r in rows
+    ]
+
+
+def _summary_lines(rows: list[Row]) -> list[str]:
+    """The 汇总统计 tail lines; a NULL tally prints as ``null``, as
+    ``format_string`` did."""
+    n, ok, diff, _, _, volume = _totals(rows)
+    lines = [
+        f"[INFO] 汇总统计: 共 {n} 张表",
+        f"  结构一致: {'null' if ok is None else ok} 张",
+    ]
+    if diff:
+        lines.append(f"  结构差异: {diff} 张")
+    return lines + [f"  总数据量: {volume}"]
+
+
+def _lines_frame(
+    summaries: DataFrame, lines: list[str], schema: str = "line string"
+) -> DataFrame:
+    return local_frame(summaries.sparkSession, [(line,) for line in lines], schema)
+
+
 def report_totals(summaries: DataFrame) -> DataFrame:
     """A20-A23: one-row totals over the latest run."""
-    latest = latest_run(summaries)
-    up = F.col("upcount").cast("string").try_cast("long")
-    down = F.col("downcount").cast("string").try_cast("long")
-    return latest.agg(
-        F.count(F.lit(1)).alias("tables_checked"),
-        F.sum(F.when(F.col("structure_ok"), 1).otherwise(0)).alias("structure_ok_cnt"),
-        F.sum(F.when(F.col("structure_ok"), 0).otherwise(1)).alias("structure_diff_cnt"),
-        F.coalesce(F.sum(up), F.lit(0)).alias("total_upcount"),
-        F.coalesce(F.sum(down), F.lit(0)).alias("total_downcount"),
-    ).withColumn(
-        # "总数据量: $((TOTAL_UPCOUNT / 1000000))M 行" — upcount only, not
-        # up+down (step3_run_syncdiff.sh:241)
-        "volume_label",
-        F.format_string("%dM 行", F.floor(F.col("total_upcount") / 1_000_000)),
-    )
+    row = _totals(_latest_rows(summaries))
+    return local_frame(summaries.sparkSession, [row], _TOTALS_SCHEMA)
 
 
 def render_report(summaries: DataFrame) -> DataFrame:
@@ -101,26 +178,9 @@ def render_report(summaries: DataFrame) -> DataFrame:
     Returns a single-column ``line`` DataFrame (text-sink ready) shaped like
     the reference's final report (``step3_run_syncdiff.sh:190-234``).
     """
-    latest = latest_run(summaries)
-    border = REPORT_BORDER
-    header = REPORT_HEADER
-    status = F.when(F.col("structure_ok"), F.lit(STRUCTURE_OK_LABEL)).otherwise(
-        F.lit(STRUCTURE_DIFF_LABEL)
-    )
-    body = latest.select(
-        report_row_line(
-            F.col("table"), status, F.col("upcount"), F.col("downcount")
-        ).alias("line"),
-        # explicit ordering key: union does not preserve row order, and a
-        # rendered report is meaningless if its lines can interleave
-        F.concat(F.lit("1_"), F.col("table")).alias("__ord"),
-    )
-    spark = summaries.sparkSession
-    frame = spark.createDataFrame(
-        [(border, "0_0"), (header, "0_1"), (border, "0_2")], "line string, __ord string"
-    )
-    tail = spark.createDataFrame([(border, "2_0")], "line string, __ord string")
-    return frame.unionByName(body).unionByName(tail).orderBy("__ord").select("line")
+    body = _body_lines(_latest_rows(summaries))
+    lines = [REPORT_BORDER, REPORT_HEADER, REPORT_BORDER, *body, REPORT_BORDER]
+    return _lines_frame(summaries, lines)
 
 
 def render_summary_block(summaries: DataFrame) -> DataFrame:
@@ -132,27 +192,8 @@ def render_summary_block(summaries: DataFrame) -> DataFrame:
     The 结构差异 line appears only when the diff count is positive, exactly
     like the reference's ``if [ "$STRUCTURE_DIFF" -gt 0 ]`` guard.
     """
-    return _summary_block_ordered(summaries).orderBy("__ord").select("line")
-
-
-def _summary_block_ordered(summaries: DataFrame, prefix: str = "") -> DataFrame:
-    t = report_totals(summaries)
-    lines = t.select(
-        F.array_compact(
-            F.array(
-                F.format_string("[INFO] 汇总统计: 共 %d 张表", F.col("tables_checked")),
-                F.format_string("  结构一致: %d 张", F.col("structure_ok_cnt")),
-                F.when(
-                    F.col("structure_diff_cnt") > 0,
-                    F.format_string("  结构差异: %d 张", F.col("structure_diff_cnt")),
-                ),
-                F.format_string("  总数据量: %s", F.col("volume_label")),
-            )
-        ).alias("lines")
-    )
-    return lines.select(F.posexplode("lines").alias("__pos", "line")).select(
-        "line", F.format_string(f"{prefix}%d", F.col("__pos")).alias("__ord")
-    )
+    lines = _summary_lines(_latest_rows(summaries))
+    return _lines_frame(summaries, lines, "line string not null")
 
 
 def render_final_report(summaries: DataFrame) -> DataFrame:
@@ -166,51 +207,20 @@ def render_final_report(summaries: DataFrame) -> DataFrame:
     natively) — ``SUMMARY_FILES`` is already latest-run-filtered when
     ``SUMMARY_COUNT=$(... | wc -l)`` runs (step3:169-172, 185).
     """
-    spark = summaries.sparkSession
-    # One job renders and collects the body rows: the found-files count (which
-    # picks the report shape, so it must be eager) and the body lines come from
-    # the same pass — no persist, so nothing is left cached across renders
-    # (ADVICE r4: the previous persist was never released on the normal path).
-    # Driver state is bounded by construction: one ~60-byte rendered line per
-    # compared table of the latest run — the report is a terminal/tee artifact
-    # in the reference (step3_run_syncdiff.sh:175) and is driver-sized by
-    # definition, the same budget as the drill-down IN-list cap.
-    status = F.when(F.col("structure_ok"), F.lit(STRUCTURE_OK_LABEL)).otherwise(
-        F.lit(STRUCTURE_DIFF_LABEL)
-    )
-    body_rows = (
-        latest_run(summaries)
-        .select(
-            report_row_line(
-                F.col("table"), status, F.col("upcount"), F.col("downcount")
-            ).alias("line"),
-            F.concat(F.lit("2_"), F.col("table")).alias("__ord"),
-        )
-        .collect()
-    )
-    n_files = len(body_rows)
-    head = [
-        (REPORT_BANNER, "0_0"),
-        (REPORT_TITLE, "0_1"),
-        (REPORT_BANNER, "0_2"),
-        ("", "0_3"),
+    rows = _latest_rows(summaries)
+    lines = [REPORT_BANNER, REPORT_TITLE, REPORT_BANNER, ""]
+    if not rows:
+        return _lines_frame(summaries, lines + [NO_SUMMARY_LINE])
+    lines += [
+        f"[INFO] 找到 {len(rows)} 个 summary.txt 文件",
+        "",
+        REPORT_BORDER,
+        REPORT_HEADER,
+        REPORT_BORDER,
+        *_body_lines(rows),
+        REPORT_BORDER,
+        "",
+        *_summary_lines(rows),
+        "",
     ]
-    schema = "line string, __ord string"
-    if n_files == 0:
-        head.append((NO_SUMMARY_LINE, "0_4"))
-        return spark.createDataFrame(head, schema).orderBy("__ord").select("line")
-    head += [
-        (f"[INFO] 找到 {n_files} 个 summary.txt 文件", "0_4"),
-        ("", "0_5"),
-        (REPORT_BORDER, "1_0"),
-        (REPORT_HEADER, "1_1"),
-        (REPORT_BORDER, "1_2"),
-        (REPORT_BORDER, "3_0"),
-        ("", "4_0"),
-        ("", "6_0"),
-    ]
-    frame = spark.createDataFrame(
-        head + [(r["line"], r["__ord"]) for r in body_rows], schema
-    )
-    tail = _summary_block_ordered(summaries, prefix="5_")
-    return frame.unionByName(tail).orderBy("__ord").select("line")
+    return _lines_frame(summaries, lines)

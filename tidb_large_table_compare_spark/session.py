@@ -55,6 +55,9 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # keep input splits bounded so a 100 TB scan parallelizes evenly
         .config("spark.sql.files.maxPartitionBytes", "256m")
+        # one sync cycle generates ~90 classes: the default 100-entry
+        # codegen cache evicted and recompiled ~20 of them every cycle
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # builder-time extras (e.g. the profiler's event-log settings, which
     # cannot be set on a live session) — measurement plumbing, not engine

@@ -8,12 +8,20 @@ catalog DataFrame of ``(table_schema, table_name, table_rows, pk_type)``:
 - from live ``spark.catalog`` metadata when tables are registered, or
 - from a parquet directory: one row per table file, row counts taken from
   parquet footer metadata (no data scan — the analog of TABLE_ROWS stats).
+
+The catalog is driver-sized — one row per candidate table — and is built as
+an Arrow local relation (``functions/frames.py::local_frame``): discovery's
+filter and projection fold into it, and collecting the work list runs no
+Spark job. A catalog past Arrow's ``localRelationThreshold`` (48 MB,
+hundreds of thousands of tables) falls back to an RDD by itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from tidb_large_table_compare_spark.functions.frames import local_frame
 
 CATALOG_SCHEMA = T.StructType(
     [
@@ -47,7 +55,7 @@ def parquet_catalog(
         n = _footer_row_count(f"{sf_dir}/{name}.parquet")
         pk_type = "NONCLUSTERED" if name in NONCLUSTERED_TABLES else "CLUSTERED"
         rows.append((schema_name, name, n * row_scale, pk_type))
-    return spark.createDataFrame(rows, CATALOG_SCHEMA)
+    return local_frame(spark, rows, CATALOG_SCHEMA)
 
 
 def _footer_row_count(path: str) -> int:
